@@ -1,0 +1,9 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** The listener bus delivers events asynchronously; per-op counters are only
+  * exact once every event of the op has been delivered. */
+object ListenerBusAccess {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
